@@ -35,88 +35,6 @@ REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 #: above the bound after the extra reps → flagged unstable in the JSON
 _STABLE_SPREAD = 0.25
 
-HEADLINE = [
-    "flagship_extract",
-    "full_pipeline",
-    "boilerplate_strip",
-    "pdf_layout",
-    "a7_word_frequency",
-    "t8_event_sessions",
-    "exact_dedup",
-    "minhash_near_dup",
-    "jaccard_near_dup",
-    "dedup_clusters",
-    "simhash",
-    "simhash_near_dup",
-    "decontaminate",
-    "curate_corpus",
-    "substr_dup_stats",
-    "ann_cosine_topk",
-    "bm25_topk",
-    "bm25_join",
-    "ivf_topk",
-    "knn_join",
-    "embedding_near_dup",
-    "semantic_dedup",
-    "asof_signup_attribution",
-    "range_join_error_sessions",
-    "lang_id_counts",
-    "line_strip",
-    "rrf_fusion",
-    "doc_quality",
-    "gopher_repetition",
-    "unigram_nll",
-    "bigram_nll",
-    "tfidf_topk_terms",
-    "edit_near_dup",
-    "pmi_collocations",
-    "paragraph_dedup",
-    "chunk_documents",
-    "source_kl_divergence",
-    "c4_filters",
-    "mojibake_repair",
-    "flesch_readability",
-    "lexical_diversity",
-    "split_summary",
-    "char_entropy",
-    "heaps_growth",
-    "cross_source_dup_matrix",
-    "event_funnel",
-    "cohort_retention",
-    "daily_anomalies",
-    "temperature_resample",
-    "length_quantiles",
-    "incremental_near_dup",
-    "leakage_safe_split",
-    "ivf_recall",
-    "collapse_repeats",
-    "dialogue_audit",
-    "ngram_coverage",
-    "cms_heavy_hitters",
-    "lsh_recall",
-    "centroid_similarity",
-    "ngram_novelty",
-    "normalized_dedup",
-    "sft_context",
-    "sft_pairs",
-    "conv_prefix_dedup",
-    "tool_runs",
-    "mad_outliers",
-    "curriculum_bins",
-    "truncate_context",
-    "merge_role_runs",
-    "quantize_embeddings",
-    "curate_conversations",
-    "turn_latency",
-    "role_transitions",
-    "bpe_token_counts",
-    "fingerprints",
-    "pii_redaction",
-    "source_stats",
-    "training_shards",
-    "q1_pricing",
-    "q3_nation_revenue",
-]
 
 
 def _sf_from_dir(d: str) -> float:
@@ -136,6 +54,8 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from ocr_spark.session import get_spark
 
+    headline = entrymod.names("bench")
+    flagship = headline[0]  # the registry lists the flagship extraction first
     spark = get_spark("ocr-spark-bench", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
@@ -144,7 +64,7 @@ def main() -> int:
     # warmup: one full flagship pass spins up all Python workers, compiles
     # the rule tables per worker, and JITs the codegen'd stages — the timed
     # runs then measure steady-state throughput (what scales on a cluster)
-    _force(qs["flagship_extract"](spark, SF_DIR))
+    _force(qs[flagship](spark, SF_DIR))
 
     def _clean_session() -> None:
         """Between-query hygiene: operators that RETURN checkpoint-backed
@@ -169,7 +89,7 @@ def main() -> int:
         return dt
 
     reps: dict[str, list[float]] = {}
-    for name in HEADLINE:
+    for name in headline:
         reps[name] = [_timed(name) for _ in range(REPS)]
 
     # per-query self-defense (same rationale as the flagship's below, at
@@ -179,7 +99,7 @@ def main() -> int:
     # >=3 clean reps for the median while a genuine regression (all reps
     # agreeing) spends nothing. Capped so a fully-contended box cannot
     # stretch the suite unboundedly.
-    for name in HEADLINE:
+    for name in headline:
         r = reps[name]
         if (max(r) - min(r)) > max(0.5, statistics.median(r)):
             r.extend(_timed(name) for _ in range(2))
@@ -191,7 +111,7 @@ def main() -> int:
     # 224 s / 218 s warm), not the plan, so a monotone warm-up ramp must
     # extend the series instead of poisoning the headline. All reps are
     # reported so a reader can see the ramp.
-    flag = reps["flagship_extract"]
+    flag = reps[flagship]
 
     def _tail_spread(r: list[float]) -> float:
         tail = r[-3:]
@@ -203,7 +123,7 @@ def main() -> int:
 
     extra = 0
     while len(flag) > 1 and _tail_spread(flag) > _STABLE_SPREAD and extra < 3:
-        flag.append(_timed("flagship_extract"))
+        flag.append(_timed(flagship))
         extra += 1
     flagship_spread = round(_tail_spread(flag), 3)
     flagship_unstable = flagship_spread > _STABLE_SPREAD
@@ -211,11 +131,11 @@ def main() -> int:
     times = {n: round(statistics.median(r), 3) for n, r in reps.items()}
     spread = {n: round(max(r) - min(r), 3) for n, r in reps.items()}
     # headline flagship time = steady-state median (last 3 reps)
-    times["flagship_extract"] = round(statistics.median(flag[-3:]), 3)
+    times[flagship] = round(statistics.median(flag[-3:]), 3)
 
     # the north metric: end-to-end turns/sec of the flagship extraction
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
-    turns_per_sec = round(n_docs / times["flagship_extract"], 1)
+    turns_per_sec = round(n_docs / times[flagship], 1)
 
     # cap-drop counters: the hot-key caps trade recall for bounded fan-out
     # (shingles over the doc-freq cap leave the Jaccard universe; over-cap

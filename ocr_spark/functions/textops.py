@@ -147,13 +147,18 @@ _SRE_EXTRA_FOLDS = str.maketrans({"ſ": "s", "ı": "i"})
 
 
 def _probe_fold(s: str) -> str:
-    """Lowercase plus the sre equivalence folds — the EXACT necessary-
-    condition haystack for probing ASCII substrings of IGNORECASE rules.
-    The translate only runs when a fold character is present (two C
-    scans), so the ASCII-dominant hot path pays nothing."""
+    """Lowercase plus the sre equivalence folds — a necessary-condition
+    haystack for probing ASCII substrings of IGNORECASE rules: if such a
+    rule matches ``s``, its probe is in the result. Not exact: dotted
+    capital I (U+0130) lowercases to i + U+0307 where sre folds it to a
+    plain i, so every i + U+0307 becomes i, including one that was typed
+    that way and that no rule can match. The folds only run when a fold
+    character is present, so the ASCII-dominant hot path pays nothing."""
     low = s.lower()
     if "ſ" in low or "ı" in low:
-        return low.translate(_SRE_EXTRA_FOLDS)
+        low = low.translate(_SRE_EXTRA_FOLDS)
+    if "\u0307" in low:
+        low = low.replace("i\u0307", "i")
     return low
 
 

@@ -62,23 +62,7 @@ EXTRACT_SCHEMA = StructType(
 )
 
 
-def _row_to_record(out: dict) -> dict:
-    out["spans"] = [
-        {"start": s, "end": e, "kind": k} for (s, e, k) in out["spans"]
-    ]
-    return out
-
-
-#: column order must match EXTRACT_SCHEMA
-_OUT_COLS = (
-    "extracted_text",
-    "normalized_text",
-    "dictionary_corrections",
-    "spelling_changes",
-    "quality",
-    "unknown_words",
-    "spans",
-)
+_OUT_COLS = tuple(EXTRACT_SCHEMA.fieldNames())
 
 
 def make_extract_udf(
@@ -156,7 +140,7 @@ CONTENT_EXTRACT_SCHEMA = StructType(
     + list(EXTRACT_SCHEMA.fields)
 )
 
-_CONTENT_EXTRACT_COLS = tuple(f.name for f in CONTENT_EXTRACT_SCHEMA.fields)
+_CONTENT_EXTRACT_COLS = tuple(CONTENT_EXTRACT_SCHEMA.fieldNames())
 
 
 def make_content_extract_udf(
@@ -213,38 +197,3 @@ def make_content_extract_udf(
 
     return run
 
-
-def make_extract_udf_with_confidence(
-    use_dictionary: bool = True,
-    use_spelling: bool = True,
-    fuzzy: bool = False,
-    extra_kamus: frozenset | None = None,
-):
-    """Variant taking (text, confidences array<double>) — for sources that
-    carry per-line OCR confidences (reference ocr_service.py:554)."""
-
-    @pandas_udf(EXTRACT_SCHEMA)
-    def extract(
-        batches: Iterator[tuple[pd.Series, pd.Series]]
-    ) -> Iterator[pd.DataFrame]:
-        from ocr_spark.functions.textops import extract_turn
-
-        for texts, confs in batches:
-            records = []
-            for t, c in zip(texts, confs):
-                conf_list = list(c) if c is not None and len(c) else None
-                records.append(
-                    _row_to_record(
-                        extract_turn(
-                            t if isinstance(t, str) else None,
-                            use_dictionary=use_dictionary,
-                            use_spelling=use_spelling,
-                            confidences=conf_list,
-                            fuzzy=fuzzy,
-                            extra_kamus=extra_kamus,
-                        )
-                    )
-                )
-            yield pd.DataFrame.from_records(records)
-
-    return extract

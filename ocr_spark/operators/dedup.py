@@ -107,12 +107,6 @@ def shingle_ids_from_tokens(toks: Column, k: int = 3) -> Column:
     )
 
 
-def shingle_ids(text_col: str = "text", k: int = 3) -> Column:
-    """Inline-tokenize form of :func:`shingle_ids_from_tokens` (same
-    staging caveat as :func:`shingles`)."""
-    return shingle_ids_from_tokens(tokens(text_col), k)
-
-
 #: postings up to this size emit their pair set as one flattened array
 #: (fastest); larger ones stream one left-member per row so a single
 #: unsafe row never buffers O(bucket²) structs

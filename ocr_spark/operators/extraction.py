@@ -11,18 +11,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.functions.udfs import make_extract_udf
+from ocr_spark.functions.udfs import (
+    CONTENT_EXTRACT_SCHEMA,
+    EXTRACT_SCHEMA,
+    make_extract_udf,
+)
 
 #: columns added by extract_turns
-OUTPUT_COLUMNS = [
-    "extracted_text",
-    "normalized_text",
-    "dictionary_corrections",
-    "spelling_changes",
-    "quality",
-    "unknown_words",
-    "spans",
-]
+OUTPUT_COLUMNS = EXTRACT_SCHEMA.fieldNames()
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:
@@ -61,14 +57,7 @@ def extract_turns(
 
 
 #: columns added by extract_content_turns (fused pipeline)
-CONTENT_EXTRACT_COLUMNS = [
-    "content_text",
-    "content_spans",
-    "n_blocks",
-    "n_content_blocks",
-    "n_boilerplate_blocks",
-    "content_words",
-] + OUTPUT_COLUMNS
+CONTENT_EXTRACT_COLUMNS = CONTENT_EXTRACT_SCHEMA.fieldNames()
 
 
 def extract_content_turns(

@@ -188,9 +188,9 @@ def test_layout_total_and_loses_no_tokens(tokens):
 
 # ---------------------------------------------------------------------------
 # Regression pins for the sre IGNORECASE equivalence folds (LONG S U+017F,
-# DOTLESS I U+0131): the reference's IGNORECASE rules match these where
-# str.lower() does not, so our substring fast-path probes must fold them
-# (textops._probe_fold). Each case was a live differential-fuzz miss.
+# DOTLESS I U+0131, DOTTED CAPITAL I U+0130): the reference's IGNORECASE
+# rules match these where str.lower() does not, so our substring fast-path
+# probes must fold them (textops._probe_fold).
 # ---------------------------------------------------------------------------
 
 
@@ -204,6 +204,9 @@ def test_layout_total_and_loses_no_tokens(tokens):
         "sıc",         # same key through DOTLESS I
         "Jsıci",       # embedded, mixed
         "ſjarat oeſ",  # digraph plus trailing long-s
+        "Sİc",         # multi-word rule key 'sic' through DOTTED CAPITAL I
+        "SİC erat",    # same, all caps, embedded
+        "İ",           # the fold alone
     ],
 )
 def test_sre_equivalence_fold_parity(text):
@@ -230,3 +233,26 @@ def test_sre_equivalence_fold_parity(text):
                 "quality",
             ):
                 assert got[k] == ref[k], (text, use_dict, use_spell, k)
+
+
+_FOLD_SUBSTITUTES = {"i": ("İ", "ı"), "s": ("ſ",)}
+
+
+def test_probe_fold_is_necessary_for_multiword_rules():
+    """Every rule match implies its probe is in the folded haystack, for
+    each sre-folding letter substituted at each i/s of the rule's probe
+    (inside the rule's own key, so the pattern can match)."""
+    from ocr_spark.functions.dictionaries import MULTI_WORD_RULES
+    from ocr_spark.functions.textops import _probe_fold
+
+    misses = []
+    for rule in MULTI_WORD_RULES:
+        at = rule.key.lower().find(rule.probe)
+        for i, ch in enumerate(rule.probe):
+            for sub in _FOLD_SUBSTITUTES.get(ch, ()):
+                probe = rule.probe[:i] + sub + rule.probe[i + 1:]
+                key = rule.key[:at] + probe + rule.key[at + len(probe):]
+                for text in (probe, key):
+                    if rule.pattern.search(text) and rule.probe not in _probe_fold(text):
+                        misses.append((rule.key, text))
+    assert not misses, misses[:10]

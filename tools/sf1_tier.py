@@ -24,50 +24,6 @@ import time
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-#: every gate/extra query that reads only documents/embeddings (the sf1
-#: tier ships no events/TPC-H tables)
-DOC_QUERIES = [
-    "exact_dedup", "minhash_near_dup", "jaccard_near_dup", "dedup_clusters",
-    "simhash_near_dup", "decontaminate", "stratified_sample", "curate_corpus",
-    "winnow_near_dup", "winnow_containment", "substr_dup_stats",
-    "lang_id_counts",
-    "bpe_token_counts", "pii_redaction", "source_stats", "training_shards",
-    "gopher_repetition", "unigram_nll", "bigram_nll", "line_strip",
-    "rrf_fusion", "tfidf_topk_terms",
-    # edit_near_dup is EXCLUDED from the sf1 sweep: its ORACLE is the
-    # brute-force banded Levenshtein self-join (the exact truth side,
-    # affordable at the 500/5k-doc gate tiers where it is verified),
-    # which is O(pairs·len²) single-threaded in DuckDB at 50k docs —
-    # measured >5 CPU-hours before being killed. The ENGINE's PassJoin
-    # side is sf1-scale (pigeonhole candidates + banded DP); the same
-    # exact-side-affordable-at-eval-tier stance as ivf_recall/lsh_recall.
-    "pmi_collocations", "paragraph_dedup", "chunk_documents",
-    "source_kl_divergence", "c4_filters", "mojibake_repair",
-    "flesch_readability", "lexical_diversity", "split_summary",
-    "char_entropy", "heaps_growth", "cross_source_dup_matrix",
-    "temperature_resample", "length_quantiles",
-    "incremental_near_dup", "leakage_safe_split", "collapse_repeats",
-    "ngram_coverage", "cms_heavy_hitters", "lsh_recall",
-    "centroid_similarity", "ngram_novelty", "normalized_dedup",
-    "mad_outliers", "curriculum_bins", "quantize_embeddings",
-    # (the X56–X59 transcript-view families read events, which the sf1
-    # tier doesn't ship — their 10× evidence is the sf0.1 events table,
-    # 10× sf0.01, via check_oracles --extended)
-    # extras (need --extended)
-    "minhash_signatures", "simhash", "dedup_corpus", "fingerprints",
-    "token_counts", "winnow_fingerprints", "doc_tf_embeddings", "doc_quality",
-    "mixture_summary", "bloom_decontaminate", "pack_summary",
-    "dsir_importance", "cap_per_source",
-    "bm25_topk", "bm25_join", "bpe_train_merges",
-]
-SIM_QUERIES = [
-    "ann_cosine_topk", "ann_lsh_topk", "ivf_topk", "knn_join",
-    "semantic_dedup", "ivf_recall",
-    # extras
-    "ann_cosine_topk_np", "ann_lsh_topk_mp", "kmeans_cells",
-]
-HEAVY = ["embedding_near_dup"]  # ~3 min at sf1; --skip-heavy drops it
-
 
 def cap_counters(sf_dir: str) -> dict:
     """The tier's hot-key drop counts — the same observability contract as
@@ -134,7 +90,11 @@ def main() -> int:
     ap.add_argument("--out", default=str(REPO / "BENCH" / "sf1.json"))
     args = ap.parse_args()
 
-    names = DOC_QUERIES + SIM_QUERIES + ([] if args.skip_heavy else HEAVY)
+    import __spark_entry__ as entrymod
+
+    names = entrymod.names("sf1")
+    if not args.skip_heavy:
+        names += entrymod.names("sf1_heavy")
     t0 = time.monotonic()
     # size the local-mode driver heap for the tier: get_spark defaults to
     # 8 GB (right for sf<=0.1), but the sf1 posting/pair shuffles allocate
