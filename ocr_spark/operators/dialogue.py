@@ -164,12 +164,16 @@ def tool_run_stats(
     10^5-turn conversation never materializes in memory.
     """
     w = Window.partitionBy(conv_col).orderBy(idx_col)
+    # ROWS, not the default RANGE frame: a duplicate turn_idx must advance
+    # the running count row by row, as row_number does (and as the DuckDB
+    # oracle's ROWS frame does); both frames agree on unique turn_idx
+    running = w.rowsBetween(Window.unboundedPreceding, 0)
     is_tool = (F.col(role_col) == tool_role).cast("long")
     turns = df.select(
         F.col(conv_col).alias("conv_id"),
         F.col(idx_col).alias("_idx"),
         (F.col(role_col) == tool_role).alias("_is_tool"),
-        (F.row_number().over(w) - F.sum(is_tool).over(w)).alias("_island"),
+        (F.row_number().over(w) - F.sum(is_tool).over(running)).alias("_island"),
     )
     runs = (
         turns.filter(F.col("_is_tool"))
@@ -231,12 +235,13 @@ def merge_role_runs(
         F.row_number().over(w) == 1
     ) | ~F.lag(role_col).over(w).eqNullSafe(F.col(role_col))
     boundary = boundary.cast("long")
+    running = w.rowsBetween(Window.unboundedPreceding, 0)  # ROWS: see tool_run_stats
     turns = df.select(
         F.col(conv_col).alias("conv_id"),
         F.col(idx_col).alias("_idx"),
         F.col(role_col).alias("_role"),
         F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
-        F.sum(boundary).over(w).alias("_island"),
+        F.sum(boundary).over(running).alias("_island"),
     )
     return (
         turns.groupBy("conv_id", "_island")

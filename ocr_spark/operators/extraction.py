@@ -29,6 +29,13 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 1
     conversation over up to ``salt_buckets`` tasks while keeping data motion
     deterministic. The later reassembly window re-shuffles on conv_id anyway,
     so the salt costs nothing extra there.
+
+    The shuffle pays for itself where one conversation holds most turns.
+    With one map task per slot (``local[4]``, 4 vCPU), dropping it cut
+    the 3,000-turn hot-conversation benchmark from 1,224 / 972 / 1,048 to
+    716 / 593 / 675 turns/s (seeds 1-3) and roughly doubled the slowest
+    group's wall time. On 24,000 short turns spread evenly over the files,
+    dropping it gained 5-18% turns/s: less than the skewed case loses.
     """
     salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
     return df.repartition(num_partitions, F.col("conv_id"), salt)

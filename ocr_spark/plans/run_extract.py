@@ -24,7 +24,11 @@ def main(argv=None) -> int:
     ap.add_argument("--no-spelling", action="store_true")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument(
+        "--shuffle-partitions", type=int, default=None,
+        help="spark.sql.shuffle.partitions and the map-stage task count per "
+        "group (default: one task per slot)",
+    )
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--sink", default="parquet", choices=["parquet", "noop"])
     ap.add_argument(
@@ -42,7 +46,7 @@ def main(argv=None) -> int:
     ap.add_argument(
         "--conf", action="append", default=[], metavar="K=V",
         help="extra SparkSession conf (repeatable), e.g. "
-        "--conf spark.sql.parquet.compression.codec=lz4",
+        "--conf spark.sql.parquet.compression.codec=zstd",
     )
     args = ap.parse_args(argv)
     for kv in args.conf:
@@ -67,6 +71,7 @@ def main(argv=None) -> int:
                 groups=args.groups,
                 use_dictionary=not args.no_dictionary,
                 use_spelling=not args.no_spelling,
+                partitions_per_group=args.shuffle_partitions,
                 salt_buckets=args.salt_buckets,
                 learned_words_path=args.learned_words,
                 sink=args.sink,

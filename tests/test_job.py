@@ -36,6 +36,66 @@ def test_run_and_counters(spark, transcripts, tmp_path):
     assert len(manifests) == 3
     m0 = json.loads(manifests[0].read_text())
     assert m0["status"] == "complete" and m0["input_files"]
+    # each manifest records the map-stage fan-out its group ran with
+    assert all(
+        json.loads(p.read_text())["map_tasks"] == job.partitions_per_group
+        for p in manifests
+    )
+
+
+def _part_files(group_dir: pathlib.Path) -> list:
+    return [p for p in group_dir.glob("*.parquet") if not p.name.startswith(".")]
+
+
+def test_map_stage_sized_to_task_slots(spark, transcripts, tmp_path):
+    """The salted map stage gets one task per slot (local[4]: 4), not
+    spark.sql.shuffle.partitions; an explicit partitions_per_group wins."""
+    path, _ = transcripts
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        job = ExtractionJob(spark, path, str(tmp_path / "slots"), groups=2)
+        assert job.partitions_per_group == spark.sparkContext.defaultParallelism == 4
+        job.run(resume=False)
+        wide = ExtractionJob(
+            spark, path, str(tmp_path / "wide"), groups=2, partitions_per_group=6
+        )
+        wide.run(resume=False)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    for k in range(2):
+        assert 0 < len(_part_files(tmp_path / "slots" / f"group={k}")) <= 4
+        assert 4 < len(_part_files(tmp_path / "wide" / f"group={k}")) <= 6
+        m = json.loads((tmp_path / "slots" / "_manifests" / f"group-{k:04d}.json").read_text())
+        assert m["map_tasks"] == 4
+        m = json.loads((tmp_path / "wide" / "_manifests" / f"group-{k:04d}.json").read_text())
+        assert m["map_tasks"] == 6
+
+
+def test_sink_codec_readable_outside_spark(spark, tmp_path):
+    """Parquet written with get_spark's default codec reads back equal in
+    pyarrow and DuckDB. The text is low-redundancy (random characters) and
+    its dictionary page passes 256 KB, where Hadoop-framed ``lz4`` output
+    fails both readers."""
+    import random
+    import string
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    rng = random.Random(5)
+    alphabet = string.ascii_letters + string.digits + " "
+    distinct = ["".join(rng.choices(alphabet, k=8192)) for _ in range(80)]
+    rows = [(i, distinct[i % len(distinct)]) for i in range(200)]
+    assert sum(len(t) for _, t in rows) >= 1 << 20
+    out = tmp_path / "codec"
+    spark.createDataFrame(rows, "id long, text string").coalesce(1).write.parquet(str(out))
+    files = _part_files(out)
+    assert len(files) == 1
+    got = pq.read_table(files[0]).sort_by("id")
+    assert list(zip(got["id"].to_pylist(), got["text"].to_pylist())) == rows
+    got = duckdb.sql(f"SELECT id, text FROM read_parquet('{files[0]}') ORDER BY id").fetchall()
+    assert got == rows
 
 
 def test_resume_skips_completed_groups(spark, transcripts, tmp_path):

@@ -246,6 +246,70 @@ def test_tool_runs_partitioning_invariance(transcripts):
     assert a == b
 
 
+def _islands(roles):
+    """Maximal runs of equal values in a role list: [(start, value, len)]."""
+    runs = []
+    for i, r in enumerate(roles):
+        if runs and runs[-1][1] == r:
+            runs[-1][2] += 1
+        else:
+            runs.append([i, r, 1])
+    return runs
+
+
+def test_running_sum_windows_rows_frame(spark):
+    """The island running sums use a ROWS frame. On unique turn_idx that
+    is the same as the default RANGE frame, so outputs match an inline
+    island reference; on a duplicate turn_idx only ROWS keeps the running
+    count in step with row_number / lag."""
+    import random
+
+    from ocr_spark.operators.dialogue import merge_role_runs
+
+    rng = random.Random(11)
+    roles = ["user", "assistant", "tool", "system", None]
+    rows, by_conv = [], {}
+    for c in range(25):
+        seq = [rng.choice(roles) for _ in range(rng.randint(1, 30))]
+        by_conv[f"c{c}"] = seq
+        rows += [_turn(f"c{c}", i * 3, r, f"t{i}") for i, r in enumerate(seq)]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, SCHEMA).repartition(3)
+
+    want_tools, want_merged = {}, set()
+    for conv, seq in by_conv.items():
+        runs = _islands(seq)
+        tool = [(s, n) for s, r, n in runs if r == "tool"]
+        if tool:
+            want_tools[conv] = (
+                sum(n for _, n in tool), len(tool),
+                max(n for _, n in tool), tool[0][0] * 3,
+            )
+        want_merged |= {(conv, s * 3, r, n) for s, r, n in runs}
+    got_tools = {
+        r["conv_id"]: (r["n_tool_turns"], r["n_runs"], r["longest_run"], r["first_run_start"])
+        for r in tool_run_stats(df).collect()
+    }
+    assert got_tools == want_tools
+    got_merged = {
+        (r["conv_id"], r["turn_idx"], r["role"], r["n_merged"])
+        for r in merge_role_runs(df).collect()
+    }
+    assert got_merged == want_merged
+
+    # duplicate turn_idx: a RANGE frame sums over both peers at once,
+    # splitting one tool run in two and merging two speakers into one
+    dup = spark.createDataFrame(
+        [_turn("d", 0, "tool"), _turn("d", 0, "tool"),
+         _turn("e", 0, "user"), _turn("e", 0, "assistant")],
+        SCHEMA,
+    )
+    d = tool_run_stats(dup).collect()
+    assert [(r["n_tool_turns"], r["n_runs"], r["longest_run"]) for r in d] == [(2, 1, 2)]
+    e = merge_role_runs(dup.filter("conv_id = 'e'")).collect()
+    assert sorted(r["n_merged"] for r in e) == [1, 1]
+
+
 def test_tool_runs_single_exchange(transcripts):
     # the window's hash partitioning on conv_id is reused by BOTH
     # downstream aggregates ((conv_id, island) and conv_id — subset-key
