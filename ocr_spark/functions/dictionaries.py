@@ -55,20 +55,23 @@ def _multiword_pattern(key: str) -> re.Pattern:
 class MultiWordRule:
     """One precompiled multi-word correction rule.
 
-    ``probe`` is the longest space-free chunk of the key, lowercased: a rule
-    can only match a string whose lowercase form contains that chunk (the
-    pattern's non-whitespace parts are literal). ``str.find`` on the probe is
-    ~100x cheaper than a regex scan, so the hot loop does 277 finds and only
-    runs the regex for probable hits.
+    ``chunks`` are the space-free chunks of the key, lowercased, longest
+    first: a rule can only match a string whose ``textops._probe_fold``
+    form contains every chunk (the pattern's non-whitespace parts are
+    literal). ``probe`` is the longest chunk. ``str.find`` on a chunk is
+    ~100x cheaper than a regex scan, so the hot loop runs the regex only
+    when all chunks occur.
     """
 
-    __slots__ = ("key", "replacement", "pattern", "probe")
+    __slots__ = ("key", "replacement", "pattern", "chunks", "probe")
 
     def __init__(self, key: str, replacement: str):
         self.key = key
         self.replacement = replacement
         self.pattern = _multiword_pattern(key)
-        self.probe = max(key.lower().split(" "), key=len) if key else ""
+        chunks = dict.fromkeys(c for c in key.lower().split(" ") if c)
+        self.chunks = tuple(sorted(chunks, key=len, reverse=True))
+        self.probe = self.chunks[0] if self.chunks else ""
 
 
 #: Rules sorted longest-key-first, ties in insertion order (stable sort) —
@@ -83,92 +86,115 @@ SPELLING_PATTERNS: list[tuple[re.Pattern, str]] = [
     (re.compile(p, re.IGNORECASE), r) for p, r in SPELLING_RULES
 ]
 
+#: A turn can only be respelled when its ``textops._probe_fold`` form holds
+#: one of these: a digraph rule's (literal) pattern or a whole ``J_TO_Y``
+#: key; whitelisted foreign words are kept as they are.
+SPELLING_NEEDLES: tuple[str, ...] = tuple(p for p, _ in SPELLING_RULES) + tuple(J_TO_Y)
+
 # ---------------------------------------------------------------------------
 # Currency / number normalization rule table.
 # Semantics mirror reference dictionary_corrector.py:1304-1408; the table
 # below is an original re-expression of those published substitution rules.
 # ---------------------------------------------------------------------------
 
-_MONTHS = r"(januari|februari|maret|april|mei|juni|juli|agustus|september|oktober|november|desember)"
-
-#: (pattern, replacement-template) pairs, applied in order, IGNORECASE.
-CURRENCY_RULES: list[tuple[re.Pattern, str]] = [
-    (re.compile(p, re.IGNORECASE), r)
-    for p, r in [
-        # Rp.XXX.-- / Rp.XXX,-- -> "Rp XXX,-"
-        (r"Rp\.?\s*(\d+(?:[.,]\d+)*)\s*[-.,]+\s*[-]+", r"Rp \1,-"),
-        # Rp.XXX / RpXXX -> "Rp XXX"
-        (r"Rp\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1"),
-        # OCR misreads of the currency marker: Ru. / Rpy
-        (r"Ru\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1"),
-        (r"R[Pp]y\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1"),
-        # Orphan amount where the marker was lost to noise: "..277" -> "Rp 277"
-        (r"(^|\s)[.:]+(\d+(?:[.,]\d+)*)(?=\s|$|[-.,])", r"\1Rp \2"),
-        # Year repair, month context: "september 962" -> "september 1962"
-        (_MONTHS + r"\s*[,.]*\s*([98]\d{2})(?!\d)", r"\1 1\2"),
-        # "97l" -> "1971" (trailing l/I/1 read as the last digit)
-        (_MONTHS + r"\s*[,.]*\s*([98]\d)[lI1](?!\d)", r"\1 1\g<2>1"),
-        # "ll Maret" -> "11 Maret"
-        (r"\b([lI]{2})\s+" + _MONTHS, r"11 \2"),
-        # Split year "19 71" -> "1971", month context only
-        (_MONTHS + r"\s*[,.]*\s*(19|20)\s+(\d{2})(?!\d)", r"\1 \2\3"),
-        # Specific amount misread
-        (r"25\s*[,.]\s*[zZ]00", r"25.100"),
-        # Spelled-number repairs
-        (r"\b[Pp][lI1][hbn]\b", r"puluh"),
-        (r"\b(ke\s*lima|kelima)\s+(ribu|ratus)", r"lima \2"),
-        (r"\bs[o0a]ratus\b", r"seratus"),
-        # Specific name repairs
-        (r"\b[Kk]asm\s*[.,]\s*nem\b", r"Kasminem"),
-        (r"\b[Ss]ukati[l1I]\b", r"Sukati"),
-        (r"\b[Mm]aineh\b", r"Mainah"),
-    ]
-]
+_MONTH_NAMES = (
+    "januari", "februari", "maret", "april", "mei", "juni", "juli",
+    "agustus", "september", "oktober", "november", "desember",
+)
+#: The lookahead on the months' first letters is implied by the alternation
+#: under IGNORECASE, so it changes no match; it lets sre skip positions with
+#: one charset test, which halves the month scans.
+_MONTHS = (
+    "(?=[" + "".join(sorted({m[0] for m in _MONTH_NAMES})) + "])"
+    "(" + "|".join(_MONTH_NAMES) + ")"
+)
 
 _DIGIT_LOOKALIKES = str.maketrans("lOoIzZsSb", "100122556")
 _HAS_LOOKALIKE = re.compile(r"[lOoIzZsS]")
-_HAS_DIGIT = re.compile(r"\d")
+HAS_DIGIT = re.compile(r"\d")
 
 
-def fix_digit_lookalikes(num: str) -> str:
-    """Translate letter-digit lookalikes inside a mixed letters+digits run
-    (post-``Rp`` amounts): l/I->1, O/o->0, z/Z->2, s/S->5, b->6."""
-    if _HAS_LOOKALIKE.search(num) and _HAS_DIGIT.search(num):
+def fix_digit_lookalikes(m: re.Match) -> str:
+    """Translate letter-digit lookalikes inside a matched mixed
+    letters+digits run (post-``Rp`` amounts): l/I->1, O/o->0, z/Z->2,
+    s/S->5, b->6."""
+    num = m.group(0)
+    if _HAS_LOOKALIKE.search(num) and HAS_DIGIT.search(num):
         return num.translate(_DIGIT_LOOKALIKES)
     return num
 
 
-#: Amount runs following "Rp " / "Rp." that may contain lookalike letters.
-AMOUNT_AFTER_RP: list[re.Pattern] = [
-    re.compile(r"(?<=Rp\s)[lOoIzZsS0-9.,]+"),
-    re.compile(r"(?<=Rp\.)[lOoIzZsS0-9.,]+"),
+def fix_year_lookalikes(m: re.Match) -> str:
+    """g->9, l->1, O->0 inside a matched 4-char year-shaped token."""
+    return m.group(0).replace("g", "9").replace("l", "1").replace("O", "0")
+
+
+class CurrencyRule:
+    """One currency/number repair: ``pattern`` rewritten by ``repl``, a
+    ``Match.expand`` template or a callable on the match.
+
+    ``admits`` is the rule's gate, a necessary condition checked on the
+    current text before the scan: the rule can only match a text whose
+    ``textops._probe_fold`` haystack (lowercase plus the sre case folds)
+    holds one of ``needles``, and, when ``digit`` is set, that has a
+    decimal digit (``\\d``).
+    """
+
+    __slots__ = ("pattern", "repl", "needles", "digit")
+
+    def __init__(self, pattern: str, repl, needles: tuple[str, ...],
+                 digit: bool = False, flags: int = re.IGNORECASE):
+        self.pattern = re.compile(pattern, flags)
+        self.repl = repl
+        self.needles = needles
+        self.digit = digit
+
+    def admits(self, fold: str, has_digit: bool) -> bool:
+        return (has_digit or not self.digit) and any(map(fold.__contains__, self.needles))
+
+
+#: The currency/number rules, applied in order.
+CURRENCY_RULES: list[CurrencyRule] = [
+    # Rp.XXX.-- / Rp.XXX,-- -> "Rp XXX,-"
+    CurrencyRule(r"Rp\.?\s*(\d+(?:[.,]\d+)*)\s*[-.,]+\s*[-]+", r"Rp \1,-", ("rp",), digit=True),
+    # Rp.XXX / RpXXX -> "Rp XXX"
+    CurrencyRule(r"Rp\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1", ("rp",), digit=True),
+    # OCR misreads of the currency marker: Ru. / Rpy
+    CurrencyRule(r"Ru\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1", ("ru",), digit=True),
+    CurrencyRule(r"R[Pp]y\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1", ("rpy",), digit=True),
+    # Orphan amount where the marker was lost to noise: "..277" -> "Rp 277"
+    CurrencyRule(
+        r"(^|\s)[.:]+(\d+(?:[.,]\d+)*)(?=\s|$|[-.,])", r"\1Rp \2", (".", ":"), digit=True
+    ),
+    # Year repair, month context: "september 962" -> "september 1962"
+    CurrencyRule(_MONTHS + r"\s*[,.]*\s*([98]\d{2})(?!\d)", r"\1 1\2", _MONTH_NAMES, digit=True),
+    # "97l" -> "1971" (trailing l/I/1 read as the last digit)
+    CurrencyRule(
+        _MONTHS + r"\s*[,.]*\s*([98]\d)[lI1](?!\d)", r"\1 1\g<2>1", _MONTH_NAMES, digit=True
+    ),
+    # "ll Maret" -> "11 Maret"
+    CurrencyRule(r"\b([lI]{2})\s+" + _MONTHS, r"11 \2", _MONTH_NAMES),
+    # Split year "19 71" -> "1971", month context only
+    CurrencyRule(
+        _MONTHS + r"\s*[,.]*\s*(19|20)\s+(\d{2})(?!\d)", r"\1 \2\3", _MONTH_NAMES, digit=True
+    ),
+    # Specific amount misread
+    CurrencyRule(r"25\s*[,.]\s*[zZ]00", r"25.100", ("25",), digit=True),
+    # Spelled-number repairs ([lI1] folds to l, i or 1)
+    CurrencyRule(r"\b[Pp][lI1][hbn]\b", r"puluh", tuple("p" + a + b for a in "li1" for b in "hbn")),
+    CurrencyRule(r"\b(ke\s*lima|kelima)\s+(ribu|ratus)", r"lima \2", ("lima",)),
+    CurrencyRule(r"\bs[o0a]ratus\b", r"seratus", ("ratus",)),
+    # Specific name repairs
+    CurrencyRule(r"\b[Kk]asm\s*[.,]\s*nem\b", r"Kasminem", ("nem",)),
+    CurrencyRule(r"\b[Ss]ukati[l1I]\b", r"Sukati", ("sukati",)),
+    CurrencyRule(r"\b[Mm]aineh\b", r"Mainah", ("maineh",)),
+    # Lookalike letters in the amount after "Rp " / "Rp." (case-sensitive)
+    CurrencyRule(r"(?<=Rp\s)[lOoIzZsS0-9.,]+", fix_digit_lookalikes, ("rp",), flags=0),
+    CurrencyRule(r"(?<=Rp\.)[lOoIzZsS0-9.,]+", fix_digit_lookalikes, ("rp",), flags=0),
+    # Year-shaped tokens with lookalike letters (case-sensitive)
+    CurrencyRule(r"\b1[9g][0-9lOog]{2}\b", fix_year_lookalikes, ("19", "1g"), digit=True, flags=0),
+    CurrencyRule(r"\b20[0-9lOo]{2}\b", fix_year_lookalikes, ("20",), digit=True, flags=0),
 ]
-
-def fix_year_lookalikes(year: str) -> str:
-    """g->9, l->1, O->0 inside a 4-char year-shaped token."""
-    return year.replace("g", "9").replace("l", "1").replace("O", "0")
-
-
-#: Year-shaped tokens possibly containing lookalike letters.
-YEAR_TOKENS: list[re.Pattern] = [
-    re.compile(r"\b1[9g][0-9lOog]{2}\b"),
-    re.compile(r"\b20[0-9lOo]{2}\b"),
-]
-
-#: exact necessary-condition probe for the whole currency stage: the
-#: alternation of every currency/year pattern (per-branch inline flags
-#: preserve each pattern's case sensitivity). combined.search() is None
-#: ⟺ no individual pattern matches anywhere — one C scan replaces ~20.
-CURRENCY_PROBE = re.compile(
-    "|".join(
-        (f"(?i:{p.pattern})" if p.flags & re.IGNORECASE else f"(?:{p.pattern})")
-        for p in (
-            [pat for pat, _ in CURRENCY_RULES]
-            + list(AMOUNT_AFTER_RP)
-            + list(YEAR_TOKENS)
-        )
-    )
-)
 
 # ---------------------------------------------------------------------------
 # Tokenizer / validator patterns shared by the text operators.

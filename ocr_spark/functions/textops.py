@@ -38,10 +38,12 @@ Span = tuple[int, int, str]  # (start, end, kind) — [start, end) char offsets
 # ---------------------------------------------------------------------------
 
 class PiecewiseMap:
-    """Monotone old-offset -> new-offset map built from contiguous segments.
+    """Monotone old-offset -> new-offset map of one edit pass, built from the
+    pass's rewritten segments, added in increasing order.
 
-    Unchanged segments shift positions exactly; positions falling inside a
-    rewritten segment clamp into the rewritten segment's new extent. Used to
+    Only rewritten segments are stored. A position inside one clamps to its
+    new start (its old end maps to its new end); any other position shifts
+    by the length change of the last rewritten segment before it. Used to
     carry spans across regex substitutions and token-loop rebuilds.
     """
 
@@ -49,20 +51,21 @@ class PiecewiseMap:
 
     def __init__(self):
         self.old_starts: list[int] = []
-        self.segs: list[tuple[int, int, int, int, bool]] = []
+        self.segs: list[tuple[int, int, int]] = []  # (old_end, new_start, new_end)
 
-    def add(self, old_s: int, old_e: int, new_s: int, new_e: int, changed: bool) -> None:
+    def __len__(self) -> int:
+        return len(self.segs)
+
+    def add(self, old_s: int, old_e: int, new_s: int, new_e: int) -> None:
         self.old_starts.append(old_s)
-        self.segs.append((old_s, old_e, new_s, new_e, changed))
+        self.segs.append((old_e, new_s, new_e))
 
     def map(self, p: int) -> int:
         i = bisect_right(self.old_starts, p) - 1
         if i < 0:
             return p
-        old_s, old_e, new_s, new_e, changed = self.segs[i]
-        if not changed:
-            return min(new_e, new_s + (p - old_s))
-        return new_s if p < old_e else new_e
+        old_e, new_s, new_e = self.segs[i]
+        return new_s if p < old_e else p - old_e + new_e
 
     def remap(self, spans: list[Span]) -> list[Span]:
         out = []
@@ -84,43 +87,30 @@ def _sub_tracked(
     and (when ``kind`` is given) records a new span per effective edit.
 
     ``repl`` is a template string (``Match.expand``) or a callable.
-    Returns (new_text, new_spans, changed). Zero-match inputs return the
-    originals untouched (one C-speed scan, same cost as ``re.sub``).
+    Returns (new_text, new_spans, changed). Inputs that no match changes
+    return the originals untouched.
     """
-    matches = list(pattern.finditer(text))
-    if not matches:
-        return text, spans, False
-
     pieces: list[str] = []
     pmap = PiecewiseMap()
     new_spans: list[Span] = []
-    pos = 0
-    out = 0
-    changed = False
-    for m in matches:
+    pos = 0  # end of the last rewritten match
+    out = 0  # its end in the output
+    for m in pattern.finditer(text):
         s, e = m.span()
-        if s > pos:
-            pieces.append(text[pos:s])
-            pmap.add(pos, s, out, out + (s - pos), False)
-            out += s - pos
         rep = repl(m) if callable(repl) else m.expand(repl)
-        original = text[s:e]
+        if rep == m.group(0):
+            continue  # copied with the text around it
+        pieces.append(text[pos:s])
+        out += s - pos
+        pmap.add(s, e, out, out + len(rep))
+        if kind is not None and rep:  # deletions have no output extent
+            new_spans.append((out, out + len(rep), kind))
         pieces.append(rep)
-        if rep != original:
-            changed = True
-            pmap.add(s, e, out, out + len(rep), True)
-            if kind is not None and rep:  # deletions have no output extent
-                new_spans.append((out, out + len(rep), kind))
-        else:
-            pmap.add(s, e, out, out + len(rep), False)
         out += len(rep)
         pos = e
-    if pos < len(text):
-        pieces.append(text[pos:])
-        pmap.add(pos, len(text), out, out + (len(text) - pos), False)
-
-    if not changed:
+    if not pmap:
         return text, spans, False
+    pieces.append(text[pos:])
     return "".join(pieces), pmap.remap(spans) + new_spans, True
 
 
@@ -137,29 +127,21 @@ def _preserve_case_phrase(matched: str, replacement: str) -> str:
     return replacement
 
 
-#: re.IGNORECASE folds by CPython sre's equivalence table, which pairs
-#: these non-ASCII letters with ASCII ones that str.lower() does NOT
-#: produce (LONG S U+017F ↔ s, DOTLESS I U+0131 ↔ i; Kelvin/Angstrom
-#: already lowercase to k/å). Substring probes over lowered text must
-#: apply the same fold or they under-approximate what an IGNORECASE
-#: regex can match — differential fuzz found both misses ('ſj', 'ſic').
-_SRE_EXTRA_FOLDS = str.maketrans({"ſ": "s", "ı": "i"})
-
-
 def _probe_fold(s: str) -> str:
     """Lowercase plus the sre equivalence folds — a necessary-condition
     haystack for probing ASCII substrings of IGNORECASE rules: if such a
-    rule matches ``s``, its probe is in the result. Not exact: dotted
+    rule matches ``s``, every literal ASCII part it matched is in the
+    result.
+
+    re.IGNORECASE folds by CPython sre's equivalence table, which pairs
+    LONG S U+017F with s and DOTLESS I U+0131 with i, where str.lower()
+    leaves both (Kelvin and Angstrom signs already lowercase to k and å);
+    differential fuzz found both misses ('ſj', 'ſic'). Not exact: dotted
     capital I (U+0130) lowercases to i + U+0307 where sre folds it to a
     plain i, so every i + U+0307 becomes i, including one that was typed
-    that way and that no rule can match. The folds only run when a fold
-    character is present, so the ASCII-dominant hot path pays nothing."""
-    low = s.lower()
-    if "ſ" in low or "ı" in low:
-        low = low.translate(_SRE_EXTRA_FOLDS)
-    if "\u0307" in low:
-        low = low.replace("i\u0307", "i")
-    return low
+    that way and that no rule can match. Each replace is one C scan that
+    returns its input when there is nothing to fold."""
+    return s.lower().replace("ſ", "s").replace("ı", "i").replace("i\u0307", "i")
 
 
 def apply_multiword(text: str, spans: Optional[list[Span]] = None) -> tuple[str, list[Span]]:
@@ -172,8 +154,9 @@ def apply_multiword(text: str, spans: Optional[list[Span]] = None) -> tuple[str,
     for rule in D.MULTI_WORD_RULES:
         if lower is None:
             lower = _probe_fold(result)
-        # cheap necessary-condition probe before the regex scan
-        if rule.probe and rule.probe not in lower:
+        # cheap necessary condition before the regex scan: every literal
+        # chunk of the key occurs (the longest, the probe, tried first)
+        if rule.probe not in lower or not all(map(lower.__contains__, rule.chunks)):
             continue
         result, spans, fired = _sub_tracked(
             rule.pattern,
@@ -337,30 +320,14 @@ def correct_with_stats(
 
     pieces: list[str] = []
     spans: list[Span] = []
-    # the offset map exists only to carry multiword spans across the token
-    # rebuild; with none to carry (the common case) its bookkeeping is waste
-    track = bool(mw_spans)
-    pmap = PiecewiseMap() if track else None
+    pmap = PiecewiseMap()  # carries the multiword spans across the rebuild
     corrections = 0
-    old = 0
-    out = 0
-
-    if track:
-        def emit(old_len: int, piece: str, changed: bool) -> None:
-            nonlocal old, out
-            pieces.append(piece)
-            pmap.add(old, old + old_len, out, out + len(piece), changed)
-            old += old_len
-            out += len(piece)
-    else:
-        def emit(old_len: int, piece: str, changed: bool) -> None:
-            nonlocal out
-            pieces.append(piece)
-            out += len(piece)
-
+    out = 0  # output offset of the current token
+    grown = 0  # output length minus input length so far
     for token in D.TOKEN_SPLIT.findall(text):
         if not token.strip():
-            emit(len(token), token, False)
+            pieces.append(token)
+            out += len(token)
             continue
         m = D.NUM_THEN_WORD.match(token)
         if m:
@@ -369,50 +336,50 @@ def correct_with_stats(
             if fixed != word:
                 corrections += 1
                 spans.append((out + len(num) + 1, out + len(num) + 1 + len(fixed), "word"))
-            emit(len(token), num + " " + fixed, True)
-            continue
-        m = D.WORD_THEN_NUM.match(token)
-        if m:
+            piece = num + " " + fixed
+        elif m := D.WORD_THEN_NUM.match(token):
             word, num = m.groups()
             fixed = correct_word(word, fuzzy, extra_kamus)
             if fixed != word:
                 corrections += 1
                 spans.append((out, out + len(fixed), "word"))
-            emit(len(token), fixed + " " + num, True)
-            continue
-        m = D.PUNCT_PEEL.match(token)
-        if m:
+            piece = fixed + " " + num
+        elif m := D.PUNCT_PEEL.match(token):
             prefix, word, suffix = m.groups()
             fixed = correct_word(word, fuzzy, extra_kamus)
-            if fixed != word:
-                corrections += 1
-                spans.append((out + len(prefix), out + len(prefix) + len(fixed), "word"))
-            emit(len(token), prefix + fixed + suffix, fixed != word)
-            continue
-        # mid-token symbols (e.g. "Dopartoron/wta"): split, correct the word
-        # sub-tokens, keep delimiters verbatim
-        rebuilt: list[str] = []
-        sub_out = out
-        token_changed = False
-        for sub in D.SYMBOL_SPLIT.split(token):
-            if not sub:
+            if fixed == word:
+                pieces.append(token)
+                out += len(token)
                 continue
-            if D.WORD_CORE.match(sub):
-                fixed = correct_word(sub, fuzzy, extra_kamus)
-                if fixed != sub:
-                    corrections += 1
-                    token_changed = True
-                    spans.append((sub_out, sub_out + len(fixed), "word"))
-                rebuilt.append(fixed)
-                sub_out += len(fixed)
-            else:
+            corrections += 1
+            spans.append((out + len(prefix), out + len(prefix) + len(fixed), "word"))
+            piece = prefix + fixed + suffix
+        else:
+            # mid-token symbols (e.g. "Dopartoron/wta"): split, correct the
+            # word sub-tokens, keep delimiters verbatim
+            rebuilt: list[str] = []
+            sub_out = out
+            for sub in D.SYMBOL_SPLIT.split(token):
+                if not sub:
+                    continue
+                if D.WORD_CORE.match(sub):
+                    fixed = correct_word(sub, fuzzy, extra_kamus)
+                    if fixed != sub:
+                        corrections += 1
+                        spans.append((sub_out, sub_out + len(fixed), "word"))
+                    sub = fixed
                 rebuilt.append(sub)
                 sub_out += len(sub)
-        emit(len(token), "".join(rebuilt), token_changed)
+            piece = "".join(rebuilt)
+        pieces.append(piece)
+        if piece != token:
+            pmap.add(out - grown, out - grown + len(token), out, out + len(piece))
+            grown += len(piece) - len(token)
+        out += len(piece)
 
-    if track:
-        return "".join(pieces), corrections, pmap.remap(mw_spans) + spans
-    return "".join(pieces), corrections, spans
+    if mw_spans and pmap:
+        mw_spans = pmap.remap(mw_spans)
+    return "".join(pieces), corrections, mw_spans + spans
 
 
 # ---------------------------------------------------------------------------
@@ -425,25 +392,22 @@ def normalize_currency(
     """Ordered currency/number repairs: Rp-format canonicalization, orphan
     amounts, month-context year repair, digit-lookalike translation after
     ``Rp``, year-token lookalike fixes. Spans of kind ``currency`` are added
-    per effective edit; incoming spans are offset-remapped."""
+    per effective edit; incoming spans are offset-remapped. A rule is only
+    scanned for when its gate (``CurrencyRule.admits``) passes on the text
+    as the rules before it left it."""
     if not text:
         return text, spans or []
     spans = spans if spans is not None else []
-    # one combined C-scan probe: skip the whole rule chain when no
-    # currency/year pattern occurs anywhere (exact, not approximate —
-    # validated against per-pattern search over corpus + goldens)
-    if D.CURRENCY_PROBE.search(text) is None:
-        return text, spans
-    for pattern, template in D.CURRENCY_RULES:
-        text, spans, _ = _sub_tracked(pattern, template, text, spans, kind="currency")
-    for pattern in D.AMOUNT_AFTER_RP:
-        text, spans, _ = _sub_tracked(
-            pattern, lambda m: D.fix_digit_lookalikes(m.group(0)), text, spans, kind="currency"
-        )
-    for pattern in D.YEAR_TOKENS:
-        text, spans, _ = _sub_tracked(
-            pattern, lambda m: D.fix_year_lookalikes(m.group(0)), text, spans, kind="currency"
-        )
+    fold = None  # gate haystack of the current text, dropped on every edit
+    for rule in D.CURRENCY_RULES:
+        if fold is None:
+            fold = _probe_fold(text)
+            has_digit = D.HAS_DIGIT.search(text) is not None
+        if not rule.admits(fold, has_digit):
+            continue
+        text, spans, fired = _sub_tracked(rule.pattern, rule.repl, text, spans, kind="currency")
+        if fired:
+            fold = None
     return text, spans
 
 
@@ -501,34 +465,31 @@ def normalize_spelling(
     if not text:
         return text, 0, spans or []
     spans = spans if spans is not None else []
-    track = bool(spans)
+    # whole-turn skip: a token can only change when its fold holds a
+    # digraph or a j->y key, and a token's fold is part of the turn's
+    fold = _probe_fold(text)
+    if not any(map(fold.__contains__, D.SPELLING_NEEDLES)):
+        return text, 0, spans
     pieces: list[str] = []
-    pmap = PiecewiseMap() if track else None
+    pmap = PiecewiseMap()
     new_spans: list[Span] = []
-    old = 0
     out = 0
+    grown = 0  # output length minus input length so far
     for token in D.TOKEN_SPLIT.findall(text):
-        if token.strip():
-            fixed = normalize_token_spelling(token)
-            if fixed != token:
-                new_spans.append((out, out + len(fixed), "spelling"))
-            if track:
-                pmap.add(old, old + len(token), out, out + len(fixed), fixed != token)
-            pieces.append(fixed)
-            out += len(fixed)
-        else:
-            if track:
-                pmap.add(old, old + len(token), out, out + len(token), False)
-            pieces.append(token)
-            out += len(token)
-        old += len(token)
+        fixed = normalize_token_spelling(token) if token.strip() else token
+        if fixed != token:
+            new_spans.append((out, out + len(fixed), "spelling"))
+            pmap.add(out - grown, out - grown + len(token), out, out + len(fixed))
+            grown += len(fixed) - len(token)
+        pieces.append(fixed)
+        out += len(fixed)
     normalized = "".join(pieces)
     changes = sum(
         1 for o, n in zip(text.split(), normalized.split()) if o != n
     )
-    if track:
-        return normalized, changes, pmap.remap(spans) + new_spans
-    return normalized, changes, new_spans
+    if spans and pmap:
+        spans = pmap.remap(spans)
+    return normalized, changes, spans + new_spans
 
 
 # ---------------------------------------------------------------------------

@@ -1026,9 +1026,12 @@ def curriculum_bins(
 
     Determinism: thresholds are the exact linear-interpolated quantile
     family (Spark ``percentile`` ≡ DuckDB ``quantile_cont`` at rank
-    ``q·(n−1)``) at exactly-representable fractions ``i/n_bins``;
-    assignment is integer-vs-double strict comparison against those
-    literals — no arithmetic whose rounding could differ.
+    ``q·(n−1)``) at the fractions ``i/n_bins``; assignment is
+    integer-vs-double strict comparison against those literals — no
+    arithmetic whose rounding could differ. The fractions are exactly
+    representable only when ``n_bins`` is a power of two (the default 8);
+    for other ``n_bins`` they are the nearest doubles, and the argument
+    rests on both engines rounding them the same way.
 
     Scale shape at 100 TB: ONE exact-percentile aggregate over a
     column-pruned 2-column scan produces ``n_bins − 1`` doubles — bounded

@@ -235,24 +235,33 @@ def test_sre_equivalence_fold_parity(text):
                 assert got[k] == ref[k], (text, use_dict, use_spell, k)
 
 
-_FOLD_SUBSTITUTES = {"i": ("İ", "ı"), "s": ("ſ",)}
+#: characters sre IGNORECASE folds onto an ASCII letter
+_FOLD_SUBSTITUTES = {"i": ("İ", "ı"), "s": ("ſ",), "k": ("\u212a",)}
+
+
+def fold_variants(text):
+    """``text`` with one letter at a time swapped for each character that
+    sre IGNORECASE folds onto it."""
+    for i, ch in enumerate(text):
+        for sub in _FOLD_SUBSTITUTES.get(ch.lower(), ()):
+            yield text[:i] + sub + text[i + 1:]
 
 
 def test_probe_fold_is_necessary_for_multiword_rules():
-    """Every rule match implies its probe is in the folded haystack, for
-    each sre-folding letter substituted at each i/s of the rule's probe
-    (inside the rule's own key, so the pattern can match)."""
+    """Every rule match implies every chunk of its key (the probe included)
+    is in the folded haystack, for each sre-folding letter substituted at
+    each i/s/k of the rule's key, as written and upper-cased."""
     from ocr_spark.functions.dictionaries import MULTI_WORD_RULES
     from ocr_spark.functions.textops import _probe_fold
 
-    misses = []
+    misses, checked = [], 0
     for rule in MULTI_WORD_RULES:
-        at = rule.key.lower().find(rule.probe)
-        for i, ch in enumerate(rule.probe):
-            for sub in _FOLD_SUBSTITUTES.get(ch, ()):
-                probe = rule.probe[:i] + sub + rule.probe[i + 1:]
-                key = rule.key[:at] + probe + rule.key[at + len(probe):]
-                for text in (probe, key):
-                    if rule.pattern.search(text) and rule.probe not in _probe_fold(text):
-                        misses.append((rule.key, text))
+        assert rule.probe == rule.chunks[0]
+        for text in (*fold_variants(rule.key), *fold_variants(rule.key.upper())):
+            if rule.pattern.search(text):
+                checked += 1
+                fold = _probe_fold(text)
+                if not all(c in fold for c in rule.chunks):
+                    misses.append((rule.key, text))
+    assert checked > 1000
     assert not misses, misses[:10]
